@@ -201,7 +201,13 @@ def clear_session_memos() -> None:
     is intended engine behavior; carrying it ACROSS repeated benchmark
     runs in one process is not — ``bench.py`` calls this between full-set
     runs so each run's per-query times reflect cold pipelines, and the
-    ML tests use it for isolation."""
+    ML tests use it for isolation.
+
+    The session table catalog (``sources._TABLE_CATALOG``) is
+    deliberately not a ``*_CACHE`` dict and survives this call: it holds
+    table metadata (footer schemas), not results, and every lookup
+    re-validates it against the file identity (size, mtime of every
+    file), so a rewritten or appended table is re-resolved anyway."""
     for mod in _MODULES:
         for attr, val in vars(mod).items():
             if attr.endswith("_CACHE") and isinstance(val, dict):

@@ -1,26 +1,157 @@
 """Sources & sinks (SURVEY §2.1, S1-S11).
 
-Readers use explicit schemas (no inferSchema double-scan — §4.3.2) and
-attach broadcast hints to dimension tables whose size is scale-invariant,
-so every downstream join of fact × dim compiles to a broadcast-hash join
-instead of shuffling the 100 TB side.
+Parquet tables are read through a session table catalog
+(:func:`resolve_table`): the footer schema of each table file is resolved
+once per SparkContext and file identity — the (size, mtime) of every
+file under the path — and checked against :mod:`schemas` for drift.
+Every later read passes the resolved schema to the reader, so it starts
+no footer-inference Spark job (the reference re-infers its inputs on
+every run — §4.3.2).  Dimension tables get broadcast hints while their
+size is scale-invariant, so every downstream join of fact × dim compiles
+to a broadcast-hash join instead of shuffling the 100 TB side.
 """
 
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from retail_sales_project_bigdata_spark.schemas import (
     BROADCAST_MAX_BYTES,
     BROADCASTABLE_TABLES,
     DUNNHUMBY_SCHEMAS,
+    EVENTS,
     TESTDATA_SCHEMAS,
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# events.parquet has shipped ``ts`` both as parquet INT64 TIMESTAMP(NANOS)
+# and as plain microsecond TIMESTAMP (read as TIMESTAMP_NTZ).  The nanos
+# encoding is unreadable as a timestamp; it is read as raw long nanos with
+# this SQL conf passed as a per-read option, never set on the session.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_EVENTS_NANOS = T.StructType(
+    [
+        T.StructField(f.name, T.LongType() if f.name == "ts" else f.dataType)
+        for f in EVENTS.fields
+    ]
+)
+
+
+class ResolvedTable(NamedTuple):
+    """One catalog entry: the schema every read of the table passes to
+    the reader, whether ``events.ts`` is stored as nanos, and the bytes
+    on disk (0 when the path is not a local one)."""
+
+    schema: T.StructType
+    nanos: bool
+    size_bytes: int
+
+
+# Session table catalog: (applicationId, absolute path) -> (file identity,
+# ResolvedTable).  Deliberately NOT a ``*_CACHE`` dict, so
+# ``registry.clear_session_memos`` leaves it alone: it holds table
+# metadata that is re-validated against the file identity on every call,
+# not a result memo.  A rewritten or appended table has a new identity
+# and is re-resolved by construction; a new SparkContext has a new
+# applicationId.  A path whose identity cannot be taken (non-local URI,
+# unlistable) is resolved on every call.  Two threads missing on the same
+# file both resolve it and store equal entries.
+_TABLE_CATALOG: dict[tuple[str, str], tuple[tuple, ResolvedTable]] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(relative name, size, mtime) of every file under a local path, or
+    None when the path is a URI, missing or unlistable."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for f in names:
+                st = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), path)
+                files.append((rel, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files)) or None
+
+
+def _check_drift(
+    table: str, declared: T.StructType, footer: T.StructType
+) -> None:
+    """Fail loudly when a declared column's footer type differs from
+    :mod:`schemas`.  Columns the footer lacks are allowed (test corpora
+    carry two-column ``documents`` tables); extra footer columns too."""
+    got = {f.name: f.dataType for f in footer.fields}
+    for f in declared.fields:
+        if f.name in got and got[f.name] != f.dataType:
+            raise ValueError(
+                f"schema drift in table {table!r}: column {f.name!r} is "
+                f"{got[f.name].simpleString()} in the parquet footer but "
+                f"{f.dataType.simpleString()} in schemas.TESTDATA_SCHEMAS"
+            )
+
+
+def _resolve_footer(
+    spark: SparkSession, path: str, size_bytes: int
+) -> ResolvedTable:
+    """Footer inference (one Spark job) plus the drift check for a table
+    named in ``TESTDATA_SCHEMAS`` (by its ``<name>.parquet`` file name)."""
+    base = os.path.basename(path.rstrip("/"))
+    table = base[: -len(".parquet")] if base.endswith(".parquet") else None
+    declared = TESTDATA_SCHEMAS.get(table)
+    try:
+        schema = spark.read.parquet(path).schema
+    except Exception as exc:  # nanos file + conf unset → inference refuses
+        if table != "events" or "PARQUET_TYPE_ILLEGAL" not in str(exc):
+            raise
+        schema = _EVENTS_NANOS
+    nanos = (
+        table == "events"
+        and "ts" in schema.fieldNames()
+        and schema["ts"].dataType == T.LongType()
+    )
+    if declared is not None:
+        _check_drift(table, _EVENTS_NANOS if nanos else declared, schema)
+    return ResolvedTable(schema, nanos, size_bytes)
+
+
+def resolve_table(spark: SparkSession, path: str) -> ResolvedTable:
+    """Catalog lookup for one parquet table path (file or directory).
+
+    Resolves the footer schema on the first call per (SparkContext, file
+    identity) and returns the cached entry on every later call — the
+    identity is re-taken each time, so the entry is never stale."""
+    identity = _file_identity(path)
+    if identity is None:
+        return _resolve_footer(spark, path, 0)
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    hit = _TABLE_CATALOG.get(key)
+    if hit is not None and hit[0] == identity:
+        return hit[1]
+    entry = _resolve_footer(spark, path, sum(f[1] for f in identity))
+    _TABLE_CATALOG[key] = (identity, entry)
+    return entry
+
+
+def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, ResolvedTable]:
+    """The one parquet read path: a fresh relation over the catalog's
+    schema (no inference job), nanos conf scoped to this relation."""
+    entry = resolve_table(spark, path)
+    reader = spark.read.schema(entry.schema)
+    if entry.nanos:
+        reader = reader.option(NANOS_AS_LONG, "true")
+    return reader.parquet(path), entry
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -47,11 +178,21 @@ def read_table(
 ) -> DataFrame:
     """Read one testdata parquet table (S3).
 
-    Schema comes from the parquet footer (no inference cost); the explicit
-    schemas in :mod:`schemas` document/validate the contract.  Dimension
-    tables get a ``broadcast()`` hint — at 100 TB the fact tables shuffle
-    terabytes if a dim join degrades to sort-merge, so the hint is part of
-    the physical design, not an afterthought (SURVEY §2.3 physical note).
+    The schema comes from the session table catalog
+    (:func:`resolve_table`): the first read of a file in a SparkContext
+    infers its footer (one Spark job) and checks it against
+    :mod:`schemas`, raising ``ValueError`` on a drifted column type;
+    every later read of the same, unchanged file passes that schema to
+    the reader and starts no job.  Each call returns a fresh relation, so
+    self-joins and ``df["col"]`` references behave as with a plain read.
+
+    Dimension tables get a ``broadcast()`` hint — at 100 TB the fact
+    tables shuffle terabytes if a dim join degrades to sort-merge, so the
+    hint is part of the physical design, not an afterthought (SURVEY §2.3
+    physical note).
+    The hint is dropped once the table's on-disk size reaches
+    ``BROADCAST_MAX_BYTES``; non-local paths keep it and Spark's own size
+    estimation takes over at join planning.
 
     Also ships this package to the Python workers (once per
     SparkContext) so Arrow-boundary queries survive a driver whose cwd
@@ -62,68 +203,35 @@ def read_table(
     )
 
     ensure_package_on_workers(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df, entry = _scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if (
         broadcast_dims
         and name in BROADCASTABLE_TABLES
-        and _on_disk_bytes(path) < BROADCAST_MAX_BYTES
+        and entry.size_bytes < BROADCAST_MAX_BYTES
     ):
         df = F.broadcast(df)
     return df
 
 
-def _on_disk_bytes(path: str) -> int:
-    """Cheap size probe for the broadcast-hint guard (local paths only;
-    non-local/missing paths return 0 so the hint stays on and Spark's own
-    size estimation takes over at join planning)."""
-    try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, files in os.walk(path)
-            for f in files
-        )
-    except OSError:
-        return 0
-
-
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table, normalizing its timestamp representation.
 
-    The testdata generator has shipped ``ts`` both as parquet INT64
-    TIMESTAMP(NANOS) (unreadable as TimestampType; needs
-    ``spark.sql.legacy.parquet.nanosAsLong``) and as plain microsecond
-    TIMESTAMP (read as TIMESTAMP_NTZ).  Branch on the physical type and
-    expose the same contract either way: ``ts_us`` (exact int64 micros —
-    use for ordering/gap arithmetic; µs matches what DuckDB's parquet
-    reader keeps, ``epoch_us(ts)``) and ``ts`` (microsecond TimestampType
-    for window functions; session tz is UTC so the instant is identical).
+    The catalog classifies the ``ts`` encoding once per file identity
+    (nanos long or microsecond TIMESTAMP_NTZ, see ``NANOS_AS_LONG``), and
+    both encodings expose the same contract: ``ts_us`` (exact int64
+    micros — use for ordering/gap arithmetic; µs matches what DuckDB's
+    parquet reader keeps, ``epoch_us(ts)``) and ``ts`` (microsecond
+    TimestampType for window functions; session tz is UTC so the instant
+    is identical).
 
     Conf scoping: the nanos branch does NOT mutate session conf.  SQL
     confs passed as datasource ``.option(...)`` are merged into the scan's
-    hadoopConf (``newHadoopConfWithOptions``), so pairing an explicit
-    user schema (skips footer inference, which ignores options) with a
-    per-read ``nanosAsLong`` option scopes the legacy behavior to this one
-    relation — concurrent reads elsewhere in the session see no change."""
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        df = spark.read.parquet(path)
-        nanos = dict(df.dtypes)["ts"] in ("bigint", "long")
-    except Exception as exc:  # nanos file + conf unset → inference refuses
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc):
-            raise
-        nanos = True
-    if nanos:
-        df = (
-            spark.read.schema(
-                "event_id long, ts long, user_id long,"
-                " event_type string, value double, props string"
-            )
-            .option("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .parquet(path)
-        )
+    hadoopConf (``newHadoopConfWithOptions``), so the catalog's explicit
+    schema plus a per-read ``nanosAsLong`` option scopes the legacy
+    behavior to this one relation — concurrent reads elsewhere in the
+    session see no change."""
+    df, entry = _scan(spark, os.path.join(sf_dir, "events.parquet"))
+    if entry.nanos:
         ts_us = F.expr("ts DIV 1000")
     else:
         ts_us = F.unix_micros(F.col("ts").cast("timestamp"))

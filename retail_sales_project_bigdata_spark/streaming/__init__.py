@@ -15,12 +15,16 @@ path (append mode + late-data eviction).
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from retail_sales_project_bigdata_spark.functions import pround
+from retail_sales_project_bigdata_spark.sources import (
+    NANOS_AS_LONG,
+    resolve_table,
+)
 
 _counter = itertools.count()
 
@@ -46,41 +50,21 @@ def _capture_microbatch_plan(name: str, q) -> None:
     while len(LAST_MICROBATCH_PLANS) > _MICROBATCH_PLANS_KEEP:
         LAST_MICROBATCH_PLANS.pop(next(iter(LAST_MICROBATCH_PLANS)))
 
-# events.parquet has shipped ``ts`` both as INT64 TIMESTAMP(NANOS) — read
-# as raw nanos long (spark.sql.legacy.parquet.nanosAsLong) — and as plain
-# microsecond TIMESTAMP (read as TIMESTAMP_NTZ).  readStream needs an
-# explicit schema, so probe the footer via a batch read and branch.
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
+# events.parquet has shipped ``ts`` both as INT64 TIMESTAMP(NANOS) and as
+# plain microsecond TIMESTAMP (read as TIMESTAMP_NTZ).  readStream needs an
+# explicit schema: take it, and the nanos classification, from the session
+# table catalog, and scope the nanos conf to this one stream's reads.
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
-
-    batch_ts = dict(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes
-    )["ts"]
-    nanos_as_long = batch_ts in ("bigint", "long")
-    schema = _events_schema(
-        T.LongType() if nanos_as_long else T.TimestampNTZType()
-    )
+    entry = resolve_table(spark, os.path.join(sf_dir, "events.parquet"))
+    reader = spark.readStream.schema(entry.schema)
+    if entry.nanos:
+        reader = reader.option(NANOS_AS_LONG, "true")
     raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+        reader.option("pathGlobFilter", "events.parquet")
         .option("maxFilesPerTrigger", 1)
         .parquet(sf_dir)
     )
-    if nanos_as_long:
+    if entry.nanos:
         ts = F.timestamp_micros(F.expr("ts DIV 1000"))
     else:
         ts = F.col("ts").cast("timestamp")
@@ -476,7 +460,6 @@ def stream_cdc_upsert_parquet(
     shuffle, and the snapshot rewrite is the standard copy-on-write
     trade lakehouse MERGE makes.  Returns the started StreamingQuery.
     """
-    import os
 
     def merge_batch(df: DataFrame, batch_id: int) -> None:
         spark = df.sparkSession
@@ -561,7 +544,6 @@ def write_stream_idempotent_parquet(
 
     Returns the started StreamingQuery (caller drives + stops it).
     """
-    import os
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         target = os.path.join(out_dir, f"batch_id={batch_id}")
@@ -594,7 +576,7 @@ def ingest_available_now(
     sink commit log) lives entirely in ``checkpoint_dir`` — restarts are
     exactly-once.
     """
-    schema = spark.read.parquet(src_dir).schema
+    schema = resolve_table(spark, src_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 4)
@@ -704,8 +686,6 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``ann_lsh_topk`` result — same buckets, same rounded-cosine
     ranking, same (desc cosine, asc neighbor) tie order.
     """
-    import os
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from retail_sales_project_bigdata_spark.operators.similarity import (
@@ -726,8 +706,8 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
         )
     )
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "embeddings.parquet")
+    schema = resolve_table(
+        spark, os.path.join(sf_dir, "embeddings.parquet")
     ).schema
     raw = (
         spark.readStream.schema(schema)

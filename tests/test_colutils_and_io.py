@@ -289,8 +289,9 @@ def test_read_events_nanos_scoped_per_read(spark, tmp_path):
         None,
         "false",
     )
-    got = read_events(spark, sf_dir).orderBy("event_id").collect()
-    assert [r.ts_us for r in got] == micros.tolist()
+    for _ in range(2):  # the second call takes the catalog's classification
+        got = read_events(spark, sf_dir).orderBy("event_id").collect()
+        assert [r.ts_us for r in got] == micros.tolist()
     # no session-visible mutation on the nanos branch
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) in (
         None,

@@ -123,18 +123,32 @@ def test_grouped_helpers_match_spark_windows(spark):
 
 
 def test_grouped_topk_rank_rejects_non_literal_scale_k(spark):
-    """k at/above windowGroupLimitThreshold must fail loudly: the
+    """k above windowGroupLimitThreshold must fail loudly: the
     WindowGroupLimit rewrite would not fire and the window would sort
-    whole strata on single tasks (ADVICE r9)."""
+    whole strata on single tasks (ADVICE r9).  k equal to the threshold
+    is valid: the rewrite still fires there."""
     import pytest
 
     from retail_sales_project_bigdata_spark.operators.ranking import (
         grouped_topk_rank,
     )
 
-    df = spark.range(10).withColumn("g", F.lit("a"))
-    with pytest.raises(ValueError, match="windowGroupLimitThreshold"):
-        grouped_topk_rank(df, ["g"], [F.asc("id")], "rk", 1000)
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "5")
+    try:
+        df = spark.range(100).withColumn("g", F.col("id") % 2)
+        with pytest.raises(ValueError, match="windowGroupLimitThreshold"):
+            grouped_topk_rank(df, ["g"], [F.asc("id")], "rk", 6)
+        at = grouped_topk_rank(df, ["g"], [F.asc("id")], "rk", 5)
+        plan = at._jdf.queryExecution().optimizedPlan().toString()
+        assert "WindowGroupLimit" in plan, plan
+        assert at.count() == 10
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_stratum_queries_have_no_per_stratum_window(spark):

@@ -34,6 +34,30 @@ def test_stateful_sessions_match_batch(spark):
     assert st == b
 
 
+def test_stateful_sessions_leave_session_conf_unchanged(spark, tmp_path):
+    """The events stream scopes the nanos conf to its own reads: building
+    the stream over a micros and a nanos events file leaves every SQL
+    conf as it was, and both encodings give the same sessions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def sql_conf() -> dict[str, str]:
+        return {r.key: r.value for r in spark.sql("SET").collect()}
+
+    events = pq.read_table(f"{SF_SMALL}/events.parquet")
+    i = events.schema.get_field_index("ts")
+    pq.write_table(
+        events.set_column(i, "ts", events["ts"].cast(pa.timestamp("ns"))),
+        str(tmp_path / "events.parquet"),
+    )
+    before = sql_conf()
+    micros = streaming_stateful_user_sessions(spark, SF_SMALL).collect()
+    assert sql_conf() == before
+    nanos = streaming_stateful_user_sessions(spark, str(tmp_path)).collect()
+    assert sql_conf() == before
+    assert sorted(map(tuple, nanos)) == sorted(map(tuple, micros))
+
+
 def test_numpy_ann_equals_expression_ann(spark):
     a1 = {
         (r.q_id, r.neighbor_id, r.cosine)

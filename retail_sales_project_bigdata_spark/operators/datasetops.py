@@ -5,9 +5,9 @@ dedup, each expressed Spark-first and each with an exact DuckDB oracle:
 
 - **dedup_groups**: connected components over the verified MinHash-LSH
   near-dup pairs — turns pairwise matches into canonical-document
-  assignments (the step that actually deletes duplicates).  Iterative
-  min-label propagation in Spark; transitive-closure recursive CTE in the
-  oracle.
+  assignments (the step that actually deletes duplicates).
+  Large-star/small-star contraction in Spark; transitive-closure
+  recursive CTE in the oracle.
 - **hash_split**: deterministic train/val/test assignment from a keyed
   md5 bucket — reproducible across runs/engines/cluster sizes, no RNG
   state, content-independent (so re-crawled text can't hop splits).
@@ -31,8 +31,8 @@ dedup, each expressed Spark-first and each with an exact DuckDB oracle:
   deterministic md5 order.
 
 Scale notes: every op here is one scan plus at most one shuffle (window
-partition or groupBy); dedup_groups adds O(component diameter) tiny
-iterations over the near-dup EDGE set (≪ corpus; the pair graph of a
+partition or groupBy); dedup_groups adds O(log component diameter)
+contraction rounds over the near-dup EDGE set (≪ corpus; the pair graph of a
 deduplicated corpus is sparse by construction).  At 100 TB none of these
 touch the payload column except pack_sequences' token count, which rides
 the same scan as the hash.
@@ -49,13 +49,15 @@ from retail_sales_project_bigdata_spark.operators.dedup import (
     MINHASH_LSH_PAIRS_SQL,
     minhash_lsh_pairs,
 )
+from retail_sales_project_bigdata_spark.operators.graph import (
+    connected_components_star,
+)
 from retail_sales_project_bigdata_spark.sources import fan_out, read_table
 
 TRAIN_PCT = 80
 VAL_PCT = 10  # remainder is test
 SAMPLE_PER_STRATUM = 50
 CONTEXT_TOKENS = 256
-MAX_CC_ITERS = 50  # safety bound; near-dup components converge in a few
 
 
 def _doc_hash(col: str = "doc_id") -> F.Column:
@@ -73,64 +75,19 @@ def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH verified near-dup pairs; every doc in a component maps to
     the component's minimum doc_id.
 
-    Spark shape: iterative min-label propagation over the undirected edge
-    list — each round joins labels to neighbors, takes the min, and
-    checks convergence (a count on the changed set).  ``localCheckpoint``
-    truncates lineage per round so the plan doesn't grow with iterations.
-    At web scale you'd switch to the large-star/small-star contraction
-    (same primitive ops, fewer rounds on high-diameter graphs); near-dup
-    components are small and dense, where plain propagation converges in
-    a handful of rounds.
+    Spark shape: large-star/small-star contraction
+    (``graph.connected_components_star``) over the pair list —
+    O(log diameter) rounds, so long near-dup chains (template and
+    boilerplate families) cost a few rounds, not one per hop.  Its
+    recursive-CTE oracle (``DEDUP_GROUPS_SQL``) value-checks the
+    contraction against DuckDB's transitive closure.
     """
-    # Persist the directed pair list BEFORE mirroring it: the union's two
-    # branches are separate plan subtrees, so without the cache boundary
-    # each would re-run the whole LSH pipeline (2× the dominant cost).
-    edges = minhash_lsh_pairs(spark, sf_dir).select("d1", "d2").persist()
-    und = edges.unionByName(
-        edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).persist()
-    labels = (
-        und.select(F.col("d1").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        # eager=False (optimization round r10, guide §5): the first
-        # round's convergence count materializes this and each round's
-        # checkpoint — one job per round instead of two.
-        .localCheckpoint(eager=False)
+    edges = minhash_lsh_pairs(spark, sf_dir).select("d1", "d2")
+    labels = connected_components_star(edges, src="d1", dst="d2")
+    return labels.select(
+        F.col("node").alias("doc_id"),
+        F.col("component").alias("canonical_id"),
     )
-    changed = -1
-    for _ in range(MAX_CC_ITERS):
-        nbr_min = (
-            und.join(labels, und.d2 == labels.doc_id)
-            .groupBy(F.col("d1").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.withColumnRenamed("label", "old_label")
-            .join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                "old_label",
-                F.least(
-                    F.col("old_label"), F.coalesce("nbr_min", "old_label")
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
-        labels = new_labels.select("doc_id", "label")
-        if changed == 0:
-            break
-    und.unpersist()
-    edges.unpersist()
-    if changed != 0:
-        # Silent truncation would return labels that are not component
-        # minima — fail loudly instead (a >MAX_CC_ITERS-diameter chain of
-        # near-dups wants the large-star/small-star variant, not a cap).
-        raise RuntimeError(
-            f"dedup_groups did not converge in {MAX_CC_ITERS} rounds"
-        )
-    return labels.select("doc_id", F.col("label").alias("canonical_id"))
 
 
 DEDUP_GROUPS_SQL = f"""
@@ -147,26 +104,6 @@ SELECT a AS doc_id, LEAST(a, MIN(b)) AS canonical_id
 FROM reach
 GROUP BY a
 """
-
-
-def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-document assignment via large-star/small-star
-    contraction (``graph.connected_components_star``) — identical output
-    contract to :func:`dedup_groups`, O(log diameter) rounds instead of
-    O(diameter), the variant to reach for when near-dup chains get long
-    (template/boilerplate families).  Shares ``dedup_groups``' exact
-    recursive-CTE oracle, so the star algorithm itself is value-checked
-    against DuckDB's transitive closure."""
-    from retail_sales_project_bigdata_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    edges = minhash_lsh_pairs(spark, sf_dir).select("d1", "d2")
-    labels = connected_components_star(edges, src="d1", dst="d2")
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("component").alias("canonical_id"),
-    )
 
 
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1407,7 +1344,7 @@ QUERIES = {
     "contamination_check": contamination_check,
     "quality_funnel": quality_funnel,
     "dedup_groups": dedup_groups,
-    "dedup_groups_star": dedup_groups_star,
+    "dedup_groups_star": dedup_groups,  # registry name kept; same code
     "dedup_survivors": dedup_survivors,
     "hash_split": hash_split,
     "stratified_sample": stratified_sample,

@@ -840,9 +840,9 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the WEB-SCALE path the plain min-label propagation in
-    ``datasetops.dedup_groups`` documents as its upgrade: each round
-    halves component diameter (O(log d) rounds on chains, where label
+    Beyond") — the package's one connected-components path; near-dup
+    grouping (``datasetops.dedup_groups``) runs on it.  Each round
+    halves component diameter (O(log d) rounds on chains, where min-label
     propagation needs O(d)), and every round is two groupBy shuffles
     over the current edge set.
 

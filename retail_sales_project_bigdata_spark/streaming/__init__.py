@@ -609,9 +609,9 @@ def streaming_corpus_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         STOPWORDS,
     )
 
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
+    schema = resolve_table(
+        spark, os.path.join(sf_dir, "documents.parquet")
+    ).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -814,9 +814,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from retail_sales_project_bigdata_spark.sources import read_table
 
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
+    schema = resolve_table(
+        spark, os.path.join(sf_dir, "documents.parquet")
+    ).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -959,9 +959,9 @@ def streaming_incremental_near_dup(
         F.col("doc_id").alias("d_corpus"), F.col("shingles").alias("sh2")
     )
 
-    schema = (
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
+    schema = resolve_table(
+        spark, os.path.join(sf_dir, "documents.parquet")
+    ).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from retail_sales_project_bigdata_spark.operators.graph import (
     DAMPING,
@@ -74,33 +75,17 @@ def test_star_contraction_on_synthetic_graphs(spark):
     assert got == want
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    """On the real LSH near-dup pair graph the star labels must equal the
-    plain min-label-propagation labels (same components, same minima)."""
-    from pyspark.sql import functions as F
+def test_star_contraction_raises_when_it_does_not_converge(spark, monkeypatch):
+    """A round cap that binds must fail loudly, never return labels that
+    are not component minima."""
+    from retail_sales_project_bigdata_spark.operators import graph
 
-    from retail_sales_project_bigdata_spark.operators.datasetops import (
-        dedup_groups,
+    monkeypatch.setattr(graph, "MAX_STAR_ROUNDS", 1)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long"
     )
-    from retail_sales_project_bigdata_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from retail_sales_project_bigdata_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    edges = minhash_lsh_pairs(spark, SF_SMALL).select(
-        F.col("d1").alias("src"), F.col("d2").alias("dst")
-    )
-    star = {
-        r.node: r.component
-        for r in connected_components_star(edges).collect()
-    }
-    prop = {
-        r.doc_id: r.canonical_id
-        for r in dedup_groups(spark, SF_SMALL).collect()
-    }
-    assert star == prop
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        graph.connected_components_star(chain)
 
 
 def test_triangle_counts_oracle_and_bruteforce(spark, duck):

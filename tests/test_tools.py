@@ -247,3 +247,28 @@ def test_gate_subset_prioritizes_never_checked_oracled(entrymod):
         first_filler = names.index(fillers[0])
         last_expected = names.index(expect[-1])
         assert last_expected < first_filler
+
+
+# ------------------------------------------------------------ plan audit
+
+
+def test_shuffle_count_dedups_plan_ids_and_keeps_idless_exchanges():
+    """Pure plan-text checks of the shuffle counter: a repeated plan_id
+    (a cached definition reprinted at each scan) counts once, and an
+    exchange printed without a plan_id still counts when others carry
+    one."""
+    import plan_audit
+
+    ex = "+- Exchange hashpartitioning(k#1, 8), ENSURE_REQUIREMENTS"
+    repeated = "\n".join([f"{ex}, [plan_id=7]"] * 3)
+    assert plan_audit._count_shuffle_exchanges(repeated) == 1
+
+    mixed = "\n".join(
+        [f"{ex}, [plan_id=7]", f"{ex}, [plan_id=7]", f"{ex}, [plan_id=9]", ex, ex]
+    )
+    assert plan_audit._count_shuffle_exchanges(mixed) == 4
+
+    idless = "\n".join([ex, "+- Project [k#1]", ex, ex])
+    assert plan_audit._count_shuffle_exchanges(idless) == idless.count(
+        "Exchange hashpartitioning"
+    ) == 3

@@ -217,13 +217,14 @@ def _count_shuffle_exchanges(plan: str) -> int:
     aggregate LOWERED executed exchanges but RAISED the text count; the
     rfm_scores budget carried 28 where 10 execute).  ``ReusedExchange``
     references never match the pattern, so runtime reuse is free as
-    before.  Plans without plan_ids fall back to the text count."""
-    ids = re.findall(
-        r"Exchange hashpartitioning.*?\[plan_id=(\d+)\]", plan
+    before.  An exchange printed without a plan_id has nothing to dedup
+    on, so each such occurrence counts once — in an id-less plan that is
+    the plain text count, and in a mixed plan those exchanges are no
+    longer dropped."""
+    hits = re.findall(
+        r"Exchange hashpartitioning(?:.*?\[plan_id=(\d+)\])?", plan
     )
-    if ids:
-        return len(set(ids))
-    return len(re.findall(r"Exchange hashpartitioning", plan))
+    return len({h for h in hits if h}) + hits.count("")
 
 
 def summarize(plan: str) -> dict[str, object]:

@@ -74,14 +74,18 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration would otherwise shuffle — strictly cheaper than 5×
     # recompute of the explode+distinct.
     # eager=False (optimization round r10, VERDICT r9 item 1 + ADVICE r9
-    # item 1): the r9 eager checkpoint ran a real Spark job at DataFrame-
-    # CONSTRUCTION time — plan-only paths (plan audits, explain dumps)
-    # paid a materialization, and under the driver's cold protocol the
-    # up-front job showed as a 0.87× regression.  Lazy keeps the same
-    # lineage cut (the logical plan is already the RDD scan; iterations
-    # still read blocks, 42 vs 130 Exchange lines) but materializes
-    # inside the first action.  Cold-protocol fresh-process A/B over 6
-    # alternating rounds (this round, min of 1 cold + 2 warm):
+    # item 1): the r9 eager checkpoint ran its whole job at DataFrame-
+    # construction time — plan-only paths (plan audits, explain dumps,
+    # which run with AQE off) paid a materialization, and under the
+    # cold-process protocol the up-front job showed as a 0.87×
+    # regression.  Lazy keeps the same lineage cut (the logical plan is
+    # already the RDD scan; iterations still read blocks, 42 vs 130
+    # Exchange lines), but under the session default, AQE on, the call
+    # itself still runs every shuffle-map stage of the edge subtree (2
+    # jobs at sf0.01, local[4]); only the final stage waits for the
+    # first action.  With AQE off it runs none.  Cold-protocol
+    # fresh-process A/B over 6 alternating rounds (this round, min of 1
+    # cold + 2 warm):
     # lazy 5.04/4.33/5.73/5.72 s, eager 5.80/4.37/4.57/4.73 s, NO
     # checkpoint 5.09/4.94/4.98/6.69 s — warm equal within noise, lazy
     # best on cold (8.6–9.6 s vs 10.5–11.6 s plain) because the edge
@@ -636,8 +640,11 @@ def kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # eager=False here and per round (optimization round r10, guide §5):
     # every checkpoint is immediately followed by the convergence count,
-    # so the count's job does the materialization — one job per round
-    # instead of two (checkpoint job + block-scan count job).
+    # which runs the final stage.  With AQE on (the session default) the
+    # localCheckpoint call itself still runs every shuffle-map stage, so
+    # a round is not one job: measured at sf0.01, local[4], the
+    # support-edge checkpoint runs 3 jobs, each round's checkpoint 4 and
+    # each count 2.
     e = _support_edges(spark, sf_dir).localCheckpoint(eager=False)
     n = e.count()
     converged = n == 0
@@ -823,16 +830,19 @@ QUERIES = {
 MAX_STAR_ROUNDS = 30
 
 
-def _edge_sets_equal(a: DataFrame, b: DataFrame) -> bool:
-    """EXACT distinct-edge-set equality for the convergence check: count
-    parity plus an empty one-sided difference (both sets are distinct by
-    construction, so A⊆B ∧ |A|=|B| ⇒ A=B).  Two small jobs per round —
-    a hash-sum fingerprint would be one job but can collide and
-    terminate contraction before the fixed point, silently returning
-    non-minimum labels."""
-    if a.count() != b.count():
-        return False
-    return b.subtract(a).limit(1).count() == 0
+def _is_star_forest(e: DataFrame) -> bool:
+    """EXACT structural check of an oriented (u, v) edge set: True iff
+    every node has at most one out-edge and no edge target has an
+    out-edge of its own — equivalently, every node with an out-edge
+    touches exactly one edge.  One aggregate over the union of (u, out=1)
+    and (v, out=0) grouped by node; no hash or fingerprint, so it never
+    stops contraction early."""
+    out_ends = e.select(F.col("u").alias("node"), F.lit(1).alias("out"))
+    in_ends = e.select(F.col("v").alias("node"), F.lit(0).alias("out"))
+    degrees = out_ends.unionByName(in_ends).groupBy("node").agg(
+        F.max("out").alias("out"), F.count(F.lit(1)).alias("deg")
+    )
+    return degrees.filter("out = 1 AND deg > 1").isEmpty()
 
 
 def connected_components_star(
@@ -851,9 +861,24 @@ def connected_components_star(
     - small-star: edges oriented high→low; each node links its smaller
       neighbors (and itself) to that minimum.
 
-    Converges when the distinct edge set is stable (exact set-equality
-    check — see ``_edge_sets_equal``);
-    ``localCheckpoint`` truncates lineage per round.  Returns
+    Stop rule: contraction stops on the first round whose checkpointed
+    output is a star forest (``_is_star_forest``: every node has at most
+    one out-edge and no edge target has an out-edge).  The labels are
+    read straight off that forest: each leaf ``u → v``, and each centre
+    ``v → v``.  The check is exact:
+
+    - after a round every edge has u > v (small-star orients high→low
+      and drops self-loops);
+    - so in a star forest each component is a star whose centre, its
+      only node without an out-edge, is smaller than every leaf: the
+      component minimum;
+    - star operations preserve connectivity, so these are exactly the
+      component-minimum labels;
+    - an oriented star forest is a fixed point of a round, so waiting
+      for an unchanged edge set would only repeat it one round later.
+
+    ``localCheckpoint`` truncates lineage per round, and more than
+    ``MAX_STAR_ROUNDS`` rounds raise ``RuntimeError``.  Returns
     (node, component) with component = the component's minimum node id.
     """
     e = (
@@ -863,9 +888,11 @@ def connected_components_star(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # eager=False: the first star round's convergence check is the
-        # materializing action (same one-job-per-round rationale as
-        # kcore_members above).
+        # eager=False: with AQE on (the session default) the call still
+        # runs every shuffle-map stage itself; only the final stage waits
+        # for the first round.  Measured on dedup_groups' LSH pairs at
+        # sf0.01, local[4]: 10 jobs here, then 7 per round's checkpoint
+        # and 2 per star-forest check.
         .localCheckpoint(eager=False)
     )
 
@@ -901,23 +928,15 @@ def connected_components_star(
         )
 
     for _ in range(MAX_STAR_ROUNDS):
-        prev = e
         e = small_star(large_star(e)).localCheckpoint(eager=False)
-        if _edge_sets_equal(prev, e):
+        if _is_star_forest(e):
             break
     else:
         raise RuntimeError(
             f"star contraction did not converge in {MAX_STAR_ROUNDS} rounds"
         )
 
-    # At the fixed point every edge points node → component minimum; nodes
-    # that appear only as a minimum map to themselves.
-    nodes = e.select(F.col("u").alias("node")).unionByName(
-        e.select(F.col("v").alias("node"))
-    ).distinct()
-    labels = e.groupBy(F.col("u").alias("node")).agg(
-        F.min("v").alias("component")
-    )
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
-    )
+    # Each leaf points at its star's centre, the component minimum; each
+    # centre labels itself.
+    roots = e.select(F.col("v").alias("u"), "v").distinct()
+    return e.unionByName(roots).toDF("node", "component")

@@ -88,6 +88,58 @@ def test_star_contraction_raises_when_it_does_not_converge(spark, monkeypatch):
         graph.connected_components_star(chain)
 
 
+def test_star_forest_check_on_tiny_edge_sets(spark):
+    """The stop rule: every node has at most one out-edge and no edge
+    target has an out-edge of its own."""
+    from retail_sales_project_bigdata_spark.operators.graph import (
+        _is_star_forest,
+    )
+
+    def frame(edges):
+        return spark.createDataFrame(edges, "u long, v long")
+
+    assert _is_star_forest(frame([(1, 0), (2, 0), (3, 0), (11, 10)]))
+    assert not _is_star_forest(frame([(2, 0), (2, 1)]))
+    assert not _is_star_forest(frame([(2, 1), (1, 0)]))
+    assert _is_star_forest(frame([]))
+
+
+def test_star_contraction_round_count_on_chain(spark, monkeypatch):
+    """The 10-node chain is a star forest after round 4: a cap of 4
+    returns its labels and a cap of 3 raises."""
+    from retail_sales_project_bigdata_spark.operators import graph
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long"
+    )
+    monkeypatch.setattr(graph, "MAX_STAR_ROUNDS", 4)
+    got = {
+        r.node: r.component
+        for r in graph.connected_components_star(chain).collect()
+    }
+    assert got == {i: 0 for i in range(10)}
+
+    monkeypatch.setattr(graph, "MAX_STAR_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        graph.connected_components_star(chain)
+
+
+def test_star_contraction_stops_at_first_star_forest(spark, monkeypatch):
+    """A star input is a star forest after one round, so one round is
+    enough: no confirmation round that repeats it."""
+    from retail_sales_project_bigdata_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_STAR_ROUNDS", 1)
+    star = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 3)], "src long, dst long"
+    )
+    got = {
+        r.node: r.component
+        for r in graph.connected_components_star(star).collect()
+    }
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0}
+
+
 def test_triangle_counts_oracle_and_bruteforce(spark, duck):
     """Oracle parity at sf0.001 plus an orientation-independent check:
     the degree-oriented enumeration must count exactly the triangles a
